@@ -2,11 +2,14 @@ package graft
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeSet, BitwiseCount, BitwiseXor, Expression, ExpressionInfo, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, PredicateHelper}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeSet, BinaryComparison, BitwiseCount, BitwiseXor, Expression, ExpressionInfo, GreaterThan, GreaterThanOrEqual, In, LeafExpression, LessThan, LessThanOrEqual, Literal, PredicateHelper}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, EmptyBlock, ExprCode, FalseLiteral, JavaCode}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
+import org.apache.spark.sql.execution.{ColumnarRule, FilterExec, SparkPlan}
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType}
 
 import graft.functions.VectorFunctions
 import graft.functions.VectorFunctions.{CosineSimilarity, JaccardSim}
@@ -28,7 +31,15 @@ import graft.plans.AsOfJoin.{AsOfJoinPlan, AsOfStrategy}
   *  - [[PushFilterThroughAsOfJoin]], the optimizer rule that restores
   *    predicate pushdown across the custom join operator (Catalyst's
   *    own pushdown rules don't know the node, so without this a filter
-  *    above an as-of join would scan both sides in full).
+  *    above an as-of join would scan both sides in full);
+  *  - [[HoistLiterals]], the physical rule that moves the primitive
+  *    constants a filter compares against out of the generated Java,
+  *    so requests that differ only in those constants share compiled
+  *    stage code. It is limited to comparison operands in filters:
+  *    there the value is only ever compared, while hoisting projection
+  *    or arithmetic literals too measured slower on the batch headline
+  *    (likely because the JIT can no longer fold e.g. `x % p` for a
+  *    constant `p`).
   *
   * This is the (reference-free) Spark-idiomatic packaging of what the
   * reference wires by hand at site boot
@@ -52,6 +63,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // batches like ConvertToLocalRelation may evaluate filters before a
     // late rewrite could reach them
     ext.injectPostHocResolutionRule(sp => MySqlCiCollation(sp))
+    // physical, before codegen: runs at AQE stage creation and in
+    // non-AQE preparation alike
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] = HoistLiterals
+    })
   }
 }
 
@@ -86,7 +102,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   * documented divergences — they change representative-row selection,
   * not membership, and stay loud in the README. */
 case class MySqlCiCollation(spark: SparkSession) extends Rule[LogicalPlan] {
-  import org.apache.spark.sql.catalyst.expressions.{BinaryComparison, Collate, In, ResolvedCollation}
+  import org.apache.spark.sql.catalyst.expressions.{Collate, ResolvedCollation}
 
   private def enabled: Boolean = spark.conf
     .getOption("spark.graft.mysqlCollation").exists(_.equalsIgnoreCase("ci"))
@@ -1182,5 +1198,63 @@ object PruneColumnsThroughAsOfJoin extends Rule[LogicalPlan] {
       val (newLeft, newRight) = (prune(j.left), prune(j.right))
       if (newLeft.eq(j.left) && newRight.eq(j.right)) p
       else Project(projList, j.copy(left = newLeft, right = newRight))
+  }
+}
+
+/** A non-null primitive constant whose value lives in a field of the
+  * generated class instead of in its Java text. `Literal` inlines the
+  * value into the code, and Spark's `CodeGenerator` cache is keyed on
+  * that text, so `WHERE k = 1` and `WHERE k = 2` compile separately
+  * and the JIT warms each fresh class from scratch. Here the value goes
+  * in through `ctx.addReferenceObj` and is unboxed once into a field at
+  * init, so the text is the same for every value. Equality, hashing, `toString`
+  * and `sql` are `Literal`'s: plans print as before, and canonicalized
+  * plans still differ by value, so exchange reuse never merges `k = 1`
+  * with `k = 2`. Not foldable, so no codegen path inlines it again. */
+case class ParamLiteral(value: Any, dataType: DataType) extends LeafExpression {
+  private def literal = Literal(value, dataType)
+  override def nullable: Boolean = false
+  override def eval(input: InternalRow): Any = value
+  override def toString: String = literal.toString
+  override def sql: String = literal.sql
+  override def equals(o: Any): Boolean = o match {
+    case p: ParamLiteral => literal == p.literal
+    case _ => false
+  }
+  override def hashCode: Int = literal.hashCode
+
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode = {
+    val javaType = CodeGenerator.javaType(dataType)
+    val boxed = ctx.addReferenceObj("param", value,
+      CodeGenerator.boxedType(dataType))
+    val field = ctx.addMutableState(javaType, "param",
+      v => s"$v = $boxed.${javaType}Value();")
+    ev.copy(code = EmptyBlock, isNull = FalseLiteral,
+      value = JavaCode.global(field, dataType))
+  }
+}
+
+/** Turns the non-null primitive constants that are direct operands of a
+  * comparison (`=`, `<=>`, `<`, `<=`, `>`, `>=`, `IN`) in a
+  * [[FilterExec]] condition into [[ParamLiteral]]s, so a request shape
+  * compiles once and later requests with other keys hit the codegen
+  * cache. Strings and decimals are left alone (`Literal` already keeps
+  * them out of the code text, as references), and so are projections and
+  * arithmetic (see [[GraftExtensions]]). Runs on the physical plan, after
+  * pushdown: the scan's pushed filters are planned from the logical
+  * plan and still carry the values. */
+object HoistLiterals extends Rule[SparkPlan] {
+  private def param(e: Expression): Expression = e match {
+    case Literal(v, dt) if v != null && CodeGenerator.isPrimitiveType(dt) =>
+      ParamLiteral(v, dt)
+    case _ => e
+  }
+
+  override def apply(plan: SparkPlan): SparkPlan = plan.transformUp {
+    case f: FilterExec => f.transformExpressions {
+      case c @ (_: BinaryComparison | _: In) =>
+        c.withNewChildren(c.children.map(param))
+    }
   }
 }

@@ -1181,9 +1181,7 @@ object Dedup {
     // broadcast map lookup — the shuffle-verify path joins the
     // corpus-wide gram-set table and must keep AQE's runtime sizing.
     val pairs = if (setsSmall) {
-      val kCpu = math.min(Int.MaxValue.toDouble,
-        estPairs(effCap) / (1 << 20)).toInt + 1
-      Iterate.staticWidth(docs.sparkSession, kCpu) {
+      Iterate.staticWidth(docs.sparkSession, pairCheckWidth(estPairs(effCap))) {
         verifiedJaccardPairs(base, candidates, threshold, setsSmall,
           textVerify = Some((docs, n)))
       }
@@ -1193,6 +1191,15 @@ object Dedup {
     base.unpersist(false)
     pairs
   }
+
+  /** Exchange width for a candidate pipeline of `estPairChecks`
+    * estimated pair checks: one task per ~2²⁰ checks, at least 1. The
+    * clamp comes after the +1, so a huge estimate saturates at
+    * `Int.MaxValue` (which `Iterate.staticWidth` then caps at the
+    * session width) instead of wrapping to `Int.MinValue` and running
+    * the largest candidate mass through one reduce task. */
+  private[graft] def pairCheckWidth(estPairChecks: Double): Int =
+    math.min(Int.MaxValue.toDouble, estPairChecks / (1 << 20) + 1).toInt
 
   /** Embedding near-dup: each vector's nearest neighbor by cosine, via
     * hyperplane-LSH blocking (16-bit signature, band-split 4×4 bits);

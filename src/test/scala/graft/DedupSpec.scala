@@ -518,4 +518,18 @@ class DedupSpec extends AnyFunSuite {
       .otherwise(lit(null).cast("boolean"))
     assert(run(d3).map(_._1) === Seq(2L, 3L, 4L, 5L, 6L))
   }
+
+  test("pair-check width saturates at Int.MaxValue on huge estimates, " +
+      "never wraps to a one-task exchange") {
+    val perTask = (1 << 20).toDouble
+    assert(Dedup.pairCheckWidth(0.0) === 1)
+    assert(Dedup.pairCheckWidth(perTask - 1) === 1)
+    assert(Dedup.pairCheckWidth(perTask) === 2)
+    assert(Dedup.pairCheckWidth(3.5 * perTask) === 4)
+    // floor(est / 2^20) = Int.MaxValue: clamping before the +1 wrapped
+    // this to Int.MinValue, which staticWidth's max(1, …) made width 1
+    assert(Dedup.pairCheckWidth(Int.MaxValue * perTask) === Int.MaxValue)
+    assert(Dedup.pairCheckWidth(1e30) === Int.MaxValue)
+    assert(Dedup.pairCheckWidth(Double.PositiveInfinity) === Int.MaxValue)
+  }
 }

@@ -1,6 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, ProjectExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.debug.codegenStringSeq
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,7 +18,7 @@ import graft.plans.AsOfJoin.AsOfJoinPlan
   * every cluster deployment uses) must expose the SQL functions, plan
   * as-of joins without manual strategy registration, and push left-side
   * filters through the custom join node. */
-class GraftExtensionsSpec extends AnyFunSuite {
+class GraftExtensionsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   // A dedicated session: extensions apply at session construction, so
   // the shared TestSpark session can't be reused. The SparkContext IS
@@ -648,6 +654,105 @@ class GraftExtensionsSpec extends AnyFunSuite {
         Thread.sleep(100)
       assert(!posted.storageLevel.useMemory,
         "triggering query's completion did not release the persist")
+    }
+  }
+
+  /** k, g = k % 7, and string / decimal / double copies of k, as parquet
+    * (a file scan, so pushed filters show on the scan node). */
+  private def hoistTable(s: SparkSession): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("hoist").toString
+    s.range(0, 700).selectExpr("id AS k", "id % 7 AS g",
+      "CAST(id AS STRING) AS s", "CAST(id AS DECIMAL(10, 2)) AS d",
+      "CAST(id AS DOUBLE) AS x")
+      .write.mode("overwrite").parquet(dir)
+    s.read.parquet(dir)
+  }
+
+  private def filterExprs(df: DataFrame): Seq[Expression] =
+    collect(df.queryExecution.executedPlan) { case f: FilterExec =>
+      f.condition }
+
+  test("HoistLiterals: filters that differ only in a compared constant " +
+      "share their generated code and compile once") {
+    withExtSession { s =>
+      val t = hoistTable(s)
+      def q(v: Int) = t.filter(col("k") === v && col("x") > v / 2.0 &&
+        col("g").isin(v % 7, (v + 1) % 7)).select("k", "g")
+      def code(df: DataFrame) =
+        codegenStringSeq(df.queryExecution.executedPlan).map(_._2)
+      val a = q(11)
+      assert(a.collect().map(_.getLong(0)).toSeq === Seq(11L))
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val b = q(12)
+      assert(b.collect().map(_.getLong(0)).toSeq === Seq(12L))
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === compiles,
+        "the second key compiled new code")
+      assert(code(a).nonEmpty && code(a) === code(b))
+      // every compared constant left the code: k, x and both IN values
+      val params = filterExprs(b).flatMap(_.collect {
+        case p: ParamLiteral => p.sql })
+      assert(params.toSet === Set("12L", "6.0D", "5L", "6L"))
+    }
+  }
+
+  test("HoistLiterals leaves arithmetic, projection, string, decimal " +
+      "and null constants inlined, and the scan's pushed filters as " +
+      "they were") {
+    withExtSession { s =>
+      val t = hoistTable(s)
+      val df = t.filter(col("k") + 3 > 5 && col("s") =!= "42" &&
+          col("d") =!= lit(BigDecimal("4.00")) && col("g").isin(1, null))
+        .select((col("k") * 10 + 1).as("y"))
+      assert(df.collect().map(_.getLong(0)).sorted.toSeq ===
+        (8L until 700L by 7L).map(_ * 10 + 1))
+      val cond = filterExprs(df)
+      assert(cond.flatMap(_.collect { case p: ParamLiteral => p.sql })
+        .toSet === Set("5L", "1L"))
+      val lits = cond.flatMap(_.collect { case l: Literal => l })
+      assert(lits.exists(_.value == 3L), cond)
+      assert(lits.exists(_.value.toString == "42"), cond)
+      assert(lits.exists(_.dataType.typeName.startsWith("decimal")), cond)
+      assert(lits.exists(_.value == null), cond)
+      val proj = collect(df.queryExecution.executedPlan) {
+        case p: ProjectExec => p.projectList }.flatten
+      assert(proj.exists(_.exists(_ == Literal(10L))) &&
+        !proj.exists(_.exists(_.isInstanceOf[ParamLiteral])))
+      // pushdown is planned from the logical plan: the scan the rule
+      // saw and the scan that ran push the same filters, values included
+      def pushed(p: org.apache.spark.sql.execution.SparkPlan) =
+        collect(p) { case f: FileSourceScanExec =>
+          f.metadata("PushedFilters") }
+      val q = t.filter(col("k") === 11)
+      q.collect()
+      assert(pushed(q.queryExecution.executedPlan) ===
+        pushed(q.queryExecution.sparkPlan))
+      assert(pushed(q.queryExecution.executedPlan).head
+        .contains("EqualTo(k,11)"))
+    }
+  }
+
+  test("HoistLiterals keeps exchange reuse exact: k = 1 and k = 2 over " +
+      "one subtree are not merged, k = 1 twice still is") {
+    withExtSession { s =>
+      // no file scan: its pushed filters would already tell the two
+      // branches apart, so only the FilterExec's constant differs here
+      val t = s.range(0, 700).selectExpr("id AS k", "id % 7 AS g")
+      val agg = t.groupBy("g").agg(count(lit(1)).as("n"), sum("k").as("sk"))
+      def branch(v: Int) = agg.filter(col("g") === v)
+      def reused(df: DataFrame) = collect(df.queryExecution.executedPlan) {
+        case r: ReusedExchangeExec => r }.size
+      for (aqe <- Seq("true", "false")) {
+        s.conf.set("spark.sql.adaptive.enabled", aqe)
+        try {
+          val distinct = branch(1).union(branch(2))
+          assert(distinct.collect().map(r => (r.getLong(0), r.getLong(2)))
+            .sorted.toSeq === Seq((1L, 34750L), (2L, 34850L)), s"aqe=$aqe")
+          assert(reused(distinct) === 0, s"aqe=$aqe")
+          val same = branch(1).union(branch(1))
+          assert(same.collect().map(_.getLong(0)).toSeq === Seq(1L, 1L))
+          assert(reused(same) === 1, s"aqe=$aqe")
+        } finally s.conf.unset("spark.sql.adaptive.enabled")
+      }
     }
   }
 }

@@ -202,4 +202,57 @@ class ServiceSpec extends AnyFunSuite {
     assert(limited.length === 5)
     assert(stats.contains("\"node\"")) // the walk saw the executed plan
   }
+
+  test("row JSON is byte-identical to toJSON on both row routes, the " +
+      "limit holds ordered and unordered, and a filter query's row " +
+      "plan has no single-partition exchange") {
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    import org.apache.spark.sql.execution.{CollectLimitExec, TakeOrderedAndProjectExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def form(sql: String, limit: Int) = "sql=" +
+      java.net.URLEncoder.encode(sql, "UTF-8") + s"&limit=$limit"
+    // the rows array: between `"rows":` and the terminal `,"rowCount":`
+    def rows(body: String) = body.substring(body.indexOf("\"rows\":") + 7,
+      body.lastIndexOf(",\"rowCount\":"))
+    def toJson(sql: String, limit: Int) = engine.getData(sql).limit(limit)
+      .toJSON.collect().mkString("[", ",", "]")
+    val typed =
+      """SELECT c_custkey AS k, c_name AS k, CAST(NULL AS STRING) AS nul,
+        |  named_struct('a', c_nationkey, 'b', array(1.5D, NULL),
+        |    'c', named_struct('z', CAST(NULL AS INT))) AS st,
+        |  map('x', c_acctbal, 'y', NULL) AS m,
+        |  TIMESTAMP '2024-01-02 03:04:05.678' AS ts,
+        |  CAST(c_acctbal AS DECIMAL(12, 2)) AS d,
+        |  concat('naïve — 日本 "q" \\ ', c_name) AS u
+        |FROM customer ORDER BY c_custkey""".stripMargin
+    val unordered = "SELECT c_custkey, c_mktsegment FROM customer"
+    withService { (c, port) =>
+      for (route <- Seq("/getData", "/query")) {
+        val typedRows = rows(post(c, port, route, form(typed, 4)))
+        assert(typedRows === toJson(typed, 4), route)
+        assert(typedRows.contains("日本") && typedRows.contains("\"ts\":"))
+        val body = post(c, port, route, form(unordered, 6))
+        assert(body.endsWith("\"rowCount\":6}"), body.takeRight(80))
+        assert(rows(body).split("\\},\\{").length === 6)
+      }
+      val ordered = "SELECT c_custkey FROM customer ORDER BY c_custkey DESC"
+      assert(rows(post(c, port, "/getData", form(ordered, 3))) ===
+        toJson(ordered, 3))
+    }
+    def finalPlan(sql: String, limit: Int) = {
+      val df = Service.rowFrame(engine.getData(sql), limit)
+      assert(df.collect().length <= limit)
+      df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+    }
+    val point = finalPlan(
+      "SELECT c_custkey, c_name FROM customer WHERE c_custkey = 7", 1000)
+    assert(point.isInstanceOf[CollectLimitExec], point)
+    assert(point.collect { case e: ShuffleExchangeExec
+        if e.outputPartitioning == SinglePartition => e }.isEmpty, point)
+    assert(finalPlan(typed, 10).isInstanceOf[TakeOrderedAndProjectExec])
+  }
 }
